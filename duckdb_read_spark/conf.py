@@ -61,33 +61,6 @@ BUILD_CONFS: dict[str, str] = {
 }
 
 
-def cluster_confs(
-    total_cores: int,
-    target_partition_mb: int = 200,
-    scan_partition_mb: int = 256,
-) -> dict[str, str]:
-    """The SCALE.md §1 conf profile for a real cluster (100 TB tier).
-
-    Returns runtime-settable SQL confs sized from the cluster shape; merge
-    over RUNTIME_CONFS when building a cluster session. Local test sessions
-    intentionally do NOT use this (fixtures fit the defaults).
-    """
-    return {
-        **RUNTIME_CONFS,
-        # initial shuffle width: 2-3x cores, AQE coalesces down
-        "spark.sql.shuffle.partitions": str(max(total_cores * 3, 64)),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": f"{target_partition_mb}m",
-        "spark.sql.files.maxPartitionBytes": f"{scan_partition_mb}m",
-        # skew thresholds: split any partition >5x median
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "5",
-        # streaming state at scale lives in RocksDB, not executor heap
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-    }
-
-
 def apply_runtime_confs(spark) -> None:
     """Pin the engine confs on an existing SparkSession (idempotent)."""
     for k, v in RUNTIME_CONFS.items():

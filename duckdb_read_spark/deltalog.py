@@ -26,8 +26,9 @@ Action shapes written (one JSON object per line, spec §Actions):
 * ``{"commitInfo": {...}}`` (free-form provenance, first line)
 
 Commit files are ``{version:020d}.json`` (0-based like Delta; private log
-version N ↔ delta file N-1) created with O_EXCL — the same
-exactly-one-writer-wins atomicity as the private log.
+version N ↔ delta file N-1) published with ``snapshots._publish_exclusive``
+(temp file + hard link) — the same exactly-one-writer-wins, never-torn
+publish as the private log.
 
 Scale shape: like Delta itself, the log is O(commits) small driver-side
 JSON files; data I/O stays distributed. Replay cost is O(commits × files)
@@ -42,6 +43,8 @@ import os
 import re
 import time
 import uuid
+
+from . import snapshots
 
 _DELTA_DIR = "_delta_log"
 
@@ -64,6 +67,11 @@ def _list_versions(table_dir: str) -> list[int]:
 def _read_actions(table_dir: str, version0: int) -> list[dict]:
     with open(_delta_path(table_dir, version0)) as f:
         return [json.loads(line) for line in f if line.strip()]
+
+
+def _actions_text(actions: list[dict]) -> str:
+    """A delta commit file's content: one JSON action per line."""
+    return "\n".join(json.dumps(a) for a in actions) + "\n"
 
 
 def _stats_str(entry: dict) -> str:
@@ -378,8 +386,7 @@ def _load_dv_bytes(table_dir: str, dv: dict) -> bytes:
 # any broadcast threshold. Larger (or cardinality-less) descriptors
 # keep the executor-side expansion so millions of deleted rows never
 # materialize on the driver.
-_DV_DRIVER_EXPAND_MAX = int(os.environ.get(
-    "DDBRS_DV_DRIVER_EXPAND_MAX", 128 * 1024))
+_DV_DRIVER_EXPAND_MAX = 128 * 1024
 
 
 def _dv_rows_df(spark, table_dir: str, dvs: dict[str, dict]):
@@ -869,9 +876,9 @@ def mirror_commit(
                 actions.append(_add_action(table_dir, e, ts,
                                            data_change=data_change))
     os.makedirs(os.path.join(table_dir, _DELTA_DIR), exist_ok=True)
-    # O_EXCL: same exactly-one-writer atomicity as the private log
-    with open(_delta_path(table_dir, version - 1), "x") as f:
-        f.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    # same exactly-one-writer, never-torn publish as the private log
+    snapshots._publish_exclusive(_delta_path(table_dir, version - 1),
+                                 _actions_text(actions))
 
 
 def backfill(table_dir: str, upto_version: int) -> None:
@@ -879,8 +886,6 @@ def backfill(table_dir: str, upto_version: int) -> None:
     predates the mirror: each historical snapshot's file set is replayed
     from the private log (paths only — no footer re-reads, so vacuumed
     files don't block; stats are optional in the spec and omitted)."""
-    from . import snapshots
-
     os.makedirs(os.path.join(table_dir, _DELTA_DIR), exist_ok=True)
     commits = snapshots.read_log(table_dir)
     prev_paths: set[str] = set()
@@ -934,8 +939,8 @@ def backfill(table_dir: str, upto_version: int) -> None:
                 "modificationTime": mtime, "dataChange": True}})
         prev_paths = cur
         try:
-            with open(_delta_path(table_dir, c.version - 1), "x") as f:
-                f.write("\n".join(json.dumps(a) for a in actions) + "\n")
+            snapshots._publish_exclusive(_delta_path(table_dir, c.version - 1),
+                                         _actions_text(actions))
         except FileExistsError:
             pass  # concurrent backfill — first writer wins
 
@@ -961,10 +966,8 @@ def write_checkpoint(table_dir: str, version0: int) -> None:
     # silently missing earlier files). Foreign _delta_log-only dirs fall
     # back to delta replay, which needs the full 0..N prefix anyway.
     try:
-        from . import snapshots as _snap
-
-        entries = _snap.snapshot_file_entries(table_dir,
-                                              version=version0 + 1)
+        entries = snapshots.snapshot_file_entries(table_dir,
+                                                  version=version0 + 1)
         ts_ms = int(time.time() * 1000)
         files = {e["path"].replace(os.sep, "/"):
                  _add_action(table_dir, e, ts_ms)["add"] for e in entries}
@@ -1024,11 +1027,9 @@ def write_checkpoint(table_dir: str, version0: int) -> None:
     tmp = ckpt + ".tmp"
     pq.write_table(table, tmp)
     os.replace(tmp, ckpt)
-    last = os.path.join(table_dir, _DELTA_DIR, "_last_checkpoint")
-    tmp = last + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"version": version0, "size": len(rows)}, f)
-    os.replace(tmp, last)
+    snapshots._replace_atomic(
+        os.path.join(table_dir, _DELTA_DIR, "_last_checkpoint"),
+        json.dumps({"version": version0, "size": len(rows)}))
 
 
 def truncate(table_dir: str, before_version: int) -> int:
@@ -1069,11 +1070,8 @@ def truncate(table_dir: str, before_version: int) -> int:
             tail = [a for a in actions if "commitInfo" not in a]
             # atomic replace: a crash mid-write must never leave a
             # half-written base commit
-            tmp = _delta_path(table_dir, base) + ".tmp"
-            with open(tmp, "w") as f:
-                f.write("\n".join(json.dumps(a)
-                                  for a in head + patch + tail) + "\n")
-            os.replace(tmp, _delta_path(table_dir, base))
+            snapshots._replace_atomic(_delta_path(table_dir, base),
+                                      _actions_text(head + patch + tail))
         if base > 0:
             # a log starting at N>0 needs a checkpoint for external
             # readers to begin replay there

@@ -44,10 +44,8 @@ _FTS_VIEW_SEQ = itertools.count(1)
 # nothing, the exact input_file_name() probe scans the whole table; below
 # this many TOTAL snapshot bytes the full rewrite it could at best avoid
 # is cheaper than the probe job itself, so the probe is skipped. Bytes,
-# not file/row/core counts, so the gate scales with data; override for
-# clusters whose write tasks are sized differently.
-_DML_PROBE_SKIP_MAX_BYTES = int(os.environ.get(
-    "DDBRS_DML_PROBE_SKIP_MAX_BYTES", 32 * 1024 * 1024))
+# not file/row/core counts, so the gate scales with data.
+_DML_PROBE_SKIP_MAX_BYTES = 32 * 1024 * 1024
 
 # INSTALL/FORCE INSTALL/LOAD statement shapes (LoadInfo.load_type analog,
 # /root/reference/duckdb:30-33).
@@ -862,7 +860,6 @@ class Engine:
         consumer re-reads the same versions on its next call
         (review r6)."""
         import json
-        import os
 
         if name not in self._versioned:
             raise ValueError(
@@ -888,12 +885,9 @@ class Engine:
                 self.spark, table_dir, last + 1, cur)
             out = out.localCheckpoint(eager=True)   # pin vs vacuum races
             pending = cur
-        tmp = cursor_path + ".tmp"
         doc = ({"version": pending} if auto_ack or last is None
                else {"version": last, "pending": pending})
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, cursor_path)
+        snapshots._replace_atomic(cursor_path, json.dumps(doc))
         return out
 
     def ack_changes(self, name: str, cursor_path: str) -> None:
@@ -901,7 +895,6 @@ class Engine:
         delivery: the cursor's pending version becomes the acked one.
         No-op if nothing is pending."""
         import json
-        import os
 
         try:
             with open(cursor_path) as f:
@@ -910,10 +903,8 @@ class Engine:
             return
         if not isinstance(doc, dict) or "pending" not in doc:
             return
-        tmp = cursor_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": doc["pending"]}, f)
-        os.replace(tmp, cursor_path)
+        snapshots._replace_atomic(cursor_path,
+                                  json.dumps({"version": doc["pending"]}))
 
     def write_versioned(self, df: DataFrame, table_dir: str,
                         mode: str = "overwrite"):
@@ -3376,16 +3367,11 @@ class Engine:
 
     def _save_sequences(self) -> None:
         import json
-        import os
 
         p = self._seq_path()
         if p is None:
             return
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._sequences, f)
-        os.replace(tmp, p)
+        snapshots._replace_atomic(p, json.dumps(self._sequences))
 
     def _create_sequence(self, name: str, clauses: str,
                          if_not_exists: bool,
@@ -3750,7 +3736,6 @@ class Engine:
         in a warehouse sidecar ('' key = the table's own comment), read
         back through duckdb_tables()/duckdb_columns() like DuckDB."""
         import json
-        import os
 
         comment = None if val.upper() == "NULL" else \
             val[1:-1].replace("''", "'")
@@ -3774,11 +3759,7 @@ class Engine:
         cs.setdefault(tbl, {})[col.lower()] = comment
         p = self._comments_path()
         if p is not None:
-            os.makedirs(os.path.dirname(p), exist_ok=True)
-            tmp = p + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(cs, f)
-            os.replace(tmp, p)
+            snapshots._replace_atomic(p, json.dumps(cs))
         return self._empty()
 
     def _resolve_catalog_tvfs(self, query: str) -> str:
@@ -4735,16 +4716,11 @@ class Engine:
 
     def _save_enum_types(self) -> None:
         import json
-        import os
 
         p = self._types_path()
         if p is None:
             return  # no warehouse yet: session-only, like sequences
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._enum_types, f)
-        os.replace(tmp, p)
+        snapshots._replace_atomic(p, json.dumps(self._enum_types))
 
     def _create_enum_type(self, name: str, vals: str) -> DataFrame:
         """``CREATE TYPE name AS ENUM (…)``: record the allowed-value list.
@@ -4830,26 +4806,19 @@ class Engine:
             return os.path.abspath(p)
         return rel
 
-    def _file_level_targets(
-        self, name: str, pred: str, dialect: str
+    def _file_targets(
+        self, name: str, hit_uris
     ) -> tuple[set[str], list[dict]] | None:
-        """Which data files of versioned table ``name`` contain pred-TRUE
-        rows — so DML rewrites only those and carries the rest by
+        """Which data files of versioned table ``name`` a DML statement
+        touches — so it rewrites only those and carries the rest by
         reference (the table-format file-skipping idea,
         /root/reference/metadata:1-17, re-expressed over the snapshot log).
 
-        Two steps, both cheap relative to a table rewrite:
-        1. manifest min/max stats cut (pure metadata, no Spark job);
-        2. exact probe over the surviving candidates:
-           ``SELECT DISTINCT input_file_name() WHERE pred`` — a
-           column-pruned, predicate-pushdown scan (what Delta's DELETE
-           does to find touched files).
-
-        Returns ``(hit_rel_paths, carried_entries)``; None when the
-        snapshot is single-file or every file is hit (plain full rewrite
-        is then strictly better — no manifest to carry)."""
-        import os
-
+        ``hit_uris(entries)`` is the caller's probe: the URIs of the hit
+        files, or None when a full rewrite is the better plan. Returns
+        ``(hit_rel_paths, carried_entries)``; None when the snapshot is
+        single-file or every file is hit (plain full rewrite is then
+        strictly better — no manifest to carry)."""
         table_dir = self._versioned[name]
         try:
             entries = snapshots.snapshot_file_entries(table_dir)
@@ -4857,32 +4826,55 @@ class Engine:
             return None
         if len(entries) <= 1:
             return None
-        cand = snapshots.prune_by_stats(entries, pred)
-        if len(cand) == len(entries):
-            # The stats cut excluded nothing, so the exact probe would
-            # scan the ENTIRE table to maybe exclude a few files. When
-            # the whole snapshot is smaller than one write task's worth
-            # of data, a plain full rewrite is strictly cheaper than
-            # paying a discovery job first (r13, guide §1.2/§6). The
-            # gate is BYTES-based so it follows data size, never core
-            # count; at scale the probe always runs (its saving there is
-            # an O(table) rewrite). Stats-prunable predicates keep the
-            # probe regardless — carried files are already guaranteed.
-            try:
-                total = sum(
-                    os.path.getsize(os.path.join(table_dir, e["path"]))
-                    for e in entries)
-            except OSError:
-                total = None
-            if total is not None and total <= _DML_PROBE_SKIP_MAX_BYTES:
-                return None
-        hit_rel: set[str] = set()
-        if cand:
+        uris = hit_uris(entries)
+        if uris is None:
+            return None
+        hit_rel = {self._uri_to_rel(u, table_dir) for u in uris}
+        if len(hit_rel) >= len(entries):
+            return None
+        carried = [e for e in entries if e["path"] not in hit_rel]
+        return hit_rel, carried
+
+    def _file_level_targets(
+        self, name: str, pred: str, dialect: str
+    ) -> tuple[set[str], list[dict]] | None:
+        """UPDATE/DELETE's touched-file discovery (:meth:`_file_targets`),
+        two steps, both cheap relative to a table rewrite:
+        1. manifest min/max stats cut (pure metadata, no Spark job);
+        2. exact probe over the surviving candidates:
+           ``SELECT DISTINCT input_file_name() WHERE pred`` — a
+           column-pruned, predicate-pushdown scan (what Delta's DELETE
+           does to find touched files)."""
+        table_dir = self._versioned[name]
+
+        def hit_uris(entries: list[dict]) -> list[str] | None:
+            cand = snapshots.prune_by_stats(entries, pred)
+            if len(cand) == len(entries):
+                # The stats cut excluded nothing, so the exact probe would
+                # scan the ENTIRE table to maybe exclude a few files. When
+                # the whole snapshot is smaller than one write task's
+                # worth of data, a plain full rewrite is strictly cheaper
+                # than paying a discovery job first (r13).
+                # The gate is BYTES-based so it follows data size, never
+                # core count; at scale the probe always runs (its saving
+                # there is an O(table) rewrite). Stats-prunable predicates
+                # keep the probe regardless — carried files are already
+                # guaranteed.
+                try:
+                    total = sum(
+                        os.path.getsize(os.path.join(table_dir, e["path"]))
+                        for e in entries)
+                except OSError:
+                    total = None
+                if total is not None and total <= _DML_PROBE_SKIP_MAX_BYTES:
+                    return None
+            if not cand:
+                return []
             from pyspark.sql import functions as F
 
             paths = [os.path.join(table_dir, e["path"]) for e in cand]
             probe = (self.spark.read.option("mergeSchema", "true")
-                     .parquet(*paths))
+                        .parquet(*paths))
             # Apply the ALTER ledger first: a pre-rename candidate file
             # carries the OLD column name, and probing the new name as
             # NULL would miss every pred-TRUE row in it — turning the
@@ -4908,14 +4900,11 @@ class Engine:
                     f"FROM {view} {name} WHERE {pred}",
                     dialect=dialect,
                 )
-                hit_rel = {self._uri_to_rel(r["__f"], table_dir)
-                           for r in hit.collect()}
+                return [r["__f"] for r in hit.collect()]
             finally:
                 self.spark.catalog.dropTempView(view)
-        if len(hit_rel) >= len(entries):
-            return None
-        carried = [e for e in entries if e["path"] not in hit_rel]
-        return hit_rel, carried
+
+        return self._file_targets(name, hit_uris)
 
     def _read_file_subset(self, name: str, rel_paths: set[str]) -> DataFrame:
         """The hit-file subset of a versioned table, aligned to the
@@ -4942,36 +4931,69 @@ class Engine:
               else F.lit(None).cast(f.dataType).alias(f.name)
               for f in schema.fields])
 
+    def _rewrite_commit(self, name: str, targets, build) -> DataFrame:
+        """Commit a DELETE/UPDATE/MERGE rewrite of versioned table ``name``
+        as one overwrite snapshot — the single rewrite path of all three.
+
+        ``targets`` is ``(hit_rel, carried)`` from file discovery (only
+        the hit files are rewritten; the carried ones enter the commit by
+        reference), or None for a full rewrite. The rewritten rows are
+        read once: the hit subset (or the whole table) is cached and bound
+        to the table's view, and ``build()`` — which returns ``(result_df,
+        cdc_df | None)`` over that view — feeds both the data write and
+        the change-feed sidecar from the cached blocks: ONE parquet scan
+        per statement (r13). The view is re-pointed at the new snapshot
+        and the cache dropped on every path, failure too."""
+        if targets is None:
+            src, carried = self.table(name), None
+        else:
+            hit_rel, carried = targets
+            src = self._read_file_subset(name, hit_rel)
+        src = src.cache()
+        try:
+            src.createOrReplaceTempView(name)
+            result, cdc = build()
+            snapshots.write_table(result, self._versioned[name],
+                                  mode="overwrite", carry_files=carried,
+                                  cdc_df=cdc)
+        finally:
+            self._refresh_table(name)
+            src.unpersist()
+        return self._empty()
+
+    def _append_commit(self, name: str, df: DataFrame) -> DataFrame:
+        """Commit ``df`` as new rows of versioned table ``name`` (INSERT,
+        COPY FROM): unique-index and constraint checks, one append
+        snapshot, view refresh."""
+        if self._indexes:
+            self._check_unique_indexes(name, df)
+        self._check_constraints(name, df)
+        snapshots.write_table(df, self._versioned[name], mode="append")
+        self._refresh_table(name)
+        return self._empty()
+
     def _merge_file_targets(
         self, target: str, talias: str, source: str, salias: str,
         on: str, dialect: str,
     ) -> tuple[set[str], list[dict]] | None:
-        """MERGE's touched-file discovery: target files containing at
-        least one ON-matching row, found with one join that scans only
-        the join-key columns (+ file name). Source rows can only match
-        rows in hit files, so the carried files are untouched by every
-        WHEN clause — including the NOT MATCHED anti-join."""
-        table_dir = self._versioned[target]
-        try:
-            entries = snapshots.snapshot_file_entries(table_dir)
-        except FileNotFoundError:
-            return None
-        if len(entries) <= 1:
-            return None
+        """MERGE's touched-file discovery (:meth:`_file_targets`): target
+        files containing at least one ON-matching row, found with one join
+        that scans only the join-key columns (+ file name). Source rows can
+        only match rows in hit files, so the carried files are untouched by
+        every WHEN clause — including the NOT MATCHED anti-join."""
         src_sql = (source if not source.startswith("(") and source == salias
                    else f"{source} {salias}")
-        hit = self.sql(
-            f"SELECT DISTINCT {talias}.__dml_file AS __f FROM "
-            f"(SELECT *, input_file_name() AS __dml_file FROM {target}) "
-            f"{talias} JOIN {src_sql} ON {on}",
-            dialect=dialect,
-        )
-        hit_rel = {self._uri_to_rel(r["__f"], table_dir)
-                   for r in hit.collect()}
-        if len(hit_rel) >= len(entries):
-            return None
-        carried = [e for e in entries if e["path"] not in hit_rel]
-        return hit_rel, carried
+
+        def hit_uris(entries: list[dict]) -> list[str]:
+            hit = self.sql(
+                f"SELECT DISTINCT {talias}.__dml_file AS __f FROM "
+                f"(SELECT *, input_file_name() AS __dml_file FROM {target}) "
+                f"{talias} JOIN {src_sql} ON {on}",
+                dialect=dialect,
+            )
+            return [r["__f"] for r in hit.collect()]
+
+        return self._file_targets(target, hit_uris)
 
     _REC_UNION_N = [0]
 
@@ -5360,13 +5382,7 @@ class Engine:
                       .alias(f.name) if f.name.lower() in src
                       else self._default_fill_expr(df, f, defaults)
                       for f in target.fields])
-                if self._indexes:
-                    self._check_unique_indexes(name, df)
-                self._check_constraints(name, df)
-                snapshots.write_table(df, self._versioned[name],
-                                      mode="append")
-                self._refresh_table(name)
-                return self._empty()
+                return self._append_commit(name, df)
             moc = _ON_CONFLICT_RE.match(body)
             if moc:
                 if m.group("orrep"):
@@ -5426,12 +5442,7 @@ class Engine:
                 df = df.toDF(*[f.name for f in target.fields])
                 df = df.select(
                     *[_duck_value_cast(df, f) for f in target.fields])
-            if self._indexes:
-                self._check_unique_indexes(name, df)
-            self._check_constraints(name, df)
-            snapshots.write_table(df, self._versioned[name], mode="append")
-            self._refresh_table(name)
-            return self._empty()
+            return self._append_commit(name, df)
         m = _DROP_RE.match(query)
         if m:
             if self._txn_baseline is not None:
@@ -5504,65 +5515,26 @@ class Engine:
             targets = (self._file_level_targets(name, pred, dialect)
                        if pred is not None
                        and not _has_subquery(pred) else None)
-            if pred is None:
-                # full delete: no sidecar needed — table_changes derives
-                # the feed from the full-overwrite diff (all rows left)
-                kept = self.table(name).limit(0)
-            elif targets is not None:
-                # file-level rewrite: only hit files are re-written; the
-                # rest of the snapshot is carried by reference. The kept
-                # rewrite and the CDC sidecar both read the hit files —
-                # cache the subset so the sidecar write reuses the blocks
-                # the kept-write materialized instead of re-scanning
-                # parquet: ONE scan per DELETE (r13, guide §2.4/§6).
-                hit_rel, carried = targets
-                sub = self._read_file_subset(name, hit_rel).cache()
-                try:
-                    sub.createOrReplaceTempView(name)
-                    kept = self.sql(
-                        f"SELECT * FROM {name} WHERE ({pred}) IS NOT TRUE",
-                        dialect=dialect)
-                    # change feed: the removed rows, captured at DML time
-                    # (Delta _change_data design) — reads the cached subset
-                    cdc = self.sql(
-                        f"SELECT *, 'delete' AS _change_type FROM {name} "
-                        f"WHERE ({pred}) IS TRUE", dialect=dialect)
-                    snapshots.write_table(kept, self._versioned[name],
-                                          mode="overwrite",
-                                          carry_files=carried,
-                                          cdc_df=cdc)
-                finally:
-                    self._refresh_table(name)
-                    sub.unpersist()
-                return self._empty()
-            else:
-                # full rewrite: kept and the CDC sidecar both scan the
-                # snapshot — rebind the view to a cached copy so the pair
-                # of writes pays one scan (the cache materializes during
-                # the kept write; the sidecar reads the blocks). The full
-                # path already rewrites the whole table, so the cached
-                # copy is the same size class as the work itself.
-                src = self.table(name).cache()
-                try:
-                    src.createOrReplaceTempView(name)
-                    # keep rows where the predicate is FALSE or NULL (SQL
-                    # DELETE removes only pred-is-TRUE rows)
-                    kept = self.sql(
-                        f"SELECT * FROM {name} WHERE ({pred}) IS NOT TRUE",
-                        dialect=dialect)
-                    cdc = self.sql(
-                        f"SELECT *, 'delete' AS _change_type FROM {name} "
-                        f"WHERE ({pred}) IS TRUE", dialect=dialect)
-                    snapshots.write_table(kept, self._versioned[name],
-                                          mode="overwrite", cdc_df=cdc)
-                finally:
-                    self._refresh_table(name)
-                    src.unpersist()
-                return self._empty()
-            snapshots.write_table(kept, self._versioned[name],
-                                  mode="overwrite", cdc_df=None)
-            self._refresh_table(name)
-            return self._empty()
+
+            def build():
+                if pred is None:
+                    # full delete: no sidecar needed — table_changes
+                    # derives the feed from the full-overwrite diff (all
+                    # rows left)
+                    return self.table(name).limit(0), None
+                # keep rows where the predicate is FALSE or NULL (SQL
+                # DELETE removes only pred-is-TRUE rows); the change feed
+                # is the removed rows, captured at DML time (Delta
+                # _change_data design)
+                kept = self.sql(
+                    f"SELECT * FROM {name} WHERE ({pred}) IS NOT TRUE",
+                    dialect=dialect)
+                cdc = self.sql(
+                    f"SELECT *, 'delete' AS _change_type FROM {name} "
+                    f"WHERE ({pred}) IS TRUE", dialect=dialect)
+                return kept, cdc
+
+            return self._rewrite_commit(name, targets, build)
         m = _UPDATE_RE.match(query)
         if m:
             name = m.group("name")
@@ -5608,42 +5580,10 @@ class Engine:
                 f"SELECT * FROM (SELECT {', '.join(cols)}, "
                 f"'update_postimage' AS _change_type FROM {name} "
                 f"WHERE ({pred or 'true'}) IS TRUE)")
-            if targets is not None:
-                # cache the hit subset: the updated rewrite plus the CDC
-                # pre/post images are THREE reads of the same files —
-                # one parquet scan materializes the cache, the sidecar
-                # reads blocks (r13, guide §2.4/§6)
-                hit_rel, carried = targets
-                sub = self._read_file_subset(name, hit_rel).cache()
-                try:
-                    sub.createOrReplaceTempView(name)
-                    updated = self.sql(
-                        f"SELECT {', '.join(cols)} FROM {name}",
-                        dialect=dialect)
-                    snapshots.write_table(updated, self._versioned[name],
-                                          mode="overwrite",
-                                          carry_files=carried,
-                                          cdc_df=self.sql(cdc_sql,
-                                                          dialect=dialect))
-                finally:
-                    self._refresh_table(name)
-                    sub.unpersist()
-                return self._empty()
-            # full rewrite: same one-scan fuse as DELETE — the rewrite
-            # materializes the cached snapshot, the pre/post sidecar
-            # reads it (3 scans → 1)
-            src = self.table(name).cache()
-            try:
-                src.createOrReplaceTempView(name)
-                updated = self.sql(
-                    f"SELECT {', '.join(cols)} FROM {name}", dialect=dialect)
-                snapshots.write_table(
-                    updated, self._versioned[name], mode="overwrite",
-                    cdc_df=self.sql(cdc_sql, dialect=dialect))
-            finally:
-                self._refresh_table(name)
-                src.unpersist()
-            return self._empty()
+            return self._rewrite_commit(name, targets, lambda: (
+                self.sql(f"SELECT {', '.join(cols)} FROM {name}",
+                         dialect=dialect),
+                self.sql(cdc_sql, dialect=dialect)))
         return None
 
     def _primary_key_cols(self, name: str) -> list[str]:
@@ -5746,8 +5686,6 @@ class Engine:
         distributed write. Like Delta, a source that matches one target row
         more than once produces duplicate target rows — keep the source
         unique on the join key."""
-        import os
-
         m = _MERGE_HEAD_RE.match(query)
         if not m:
             raise ValueError("cannot parse MERGE INTO statement")
@@ -5991,26 +5929,9 @@ class Engine:
         if bysrc_upd is None and not bysrc_has_delete:
             fl = self._merge_file_targets(target, talias, source, salias, on,
                                           dialect)
-        if fl is not None:
-            hit_rel, carried = fl
-            sub = self._read_file_subset(target, hit_rel)
-            try:
-                sub.createOrReplaceTempView(target)
-                result = self.sql(full_sql, dialect=dialect)
-                cdc = (self.sql(cdc_sql, dialect=dialect)
-                       if cdc_parts else None)
-                snapshots.write_table(result, self._versioned[target],
-                                      mode="overwrite", carry_files=carried,
-                                      cdc_df=cdc)
-            finally:
-                self._refresh_table(target)
-            return self._empty()
-        result = self.sql(full_sql, dialect=dialect)
-        cdc = self.sql(cdc_sql, dialect=dialect) if cdc_parts else None
-        snapshots.write_table(result, self._versioned[target],
-                              mode="overwrite", cdc_df=cdc)
-        self._refresh_table(target)
-        return self._empty()
+        return self._rewrite_commit(target, fl, lambda: (
+            self.sql(full_sql, dialect=dialect),
+            self.sql(cdc_sql, dialect=dialect) if cdc_parts else None))
 
     def _copy_to(self, src: str, path: str, opts: str | None, dialect: str) -> DataFrame:
         """DuckDB ``COPY src TO 'path' (FORMAT x, ...)`` analog. The source
@@ -6185,12 +6106,7 @@ class Engine:
                 f"COPY FROM {name}: source is missing column(s) {missing}")
         df = df.select(
             *[F.col(f.name).cast(f.dataType) for f in target.fields])
-        if self._indexes:
-            self._check_unique_indexes(name, df)
-        self._check_constraints(name, df)  # imports are INSERTs too
-        snapshots.write_table(df, self._versioned[name], mode="append")
-        self._refresh_table(name)
-        return self._empty()
+        return self._append_commit(name, df)  # imports are INSERTs too
 
     def execute(self, script: str, dialect: str = "spark") -> list[DataFrame]:
         """Execute a multi-statement script (the CLI path, shell.cpp analog:

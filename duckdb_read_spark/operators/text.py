@@ -58,13 +58,6 @@ def _marker_ratio_sql(text_col: str, markers: tuple[str, ...]) -> str:
             f"greatest(size({toks}), 1)")
 
 
-def marker_ratio(text: Column, markers: tuple[str, ...]) -> Column:
-    """Fraction of whitespace tokens that are in the marker list."""
-    toks = tokens(text)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*markers)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-language marker-hit ratio columns ``score_<lang>`` plus argmax
     ``lang_pred``. One projection, no shuffle."""

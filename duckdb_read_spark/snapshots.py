@@ -16,15 +16,23 @@ This module is that idea in miniature, Spark-first and dependency-free
         _log/00000001.json  00000002.json ...   (one entry per commit)
         data/v1-<uuid>/part-*.parquet           (normal Spark parquet writes)
 
-* each log entry: ``{"version", "timestamp_ms", "mode": "overwrite"|
-  "append", "dirs": [relative data dirs]}``. A snapshot at version N =
-  the dirs of the latest overwrite ≤ N plus every append after it.
-* commits are atomic: the entry is written with O_EXCL create — two
-  concurrent writers race on the version file name and exactly one wins
-  (the Delta commit protocol, minus the retry loop).
-* reads list ONLY the dirs the chosen snapshot names — stale data files
-  from overwritten versions stay on disk for older snapshots (vacuum is a
-  policy decision, not implemented).
+* each log entry is one serialized :class:`Commit`: ``{"version",
+  "timestamp_ms", "mode": "overwrite"|"append", "dirs": [relative data
+  dirs], "files": [manifest entries] | null, ...}``. A snapshot at version
+  N = the files (or dirs) of the latest overwrite ≤ N plus every append
+  after it.
+* commits are published by :func:`_publish`, the one place a log entry is
+  written: the entry goes to a temp file in ``_log/`` that is then
+  hard-linked to its version name. The link fails if the name exists, so
+  two concurrent writers race on the version and exactly one wins (the
+  Delta commit protocol, minus the retry loop); and a crash mid-write
+  leaves only a temp file no reader lists — never a torn commit. The
+  ``_delta_log`` mirror is then written best-effort (a failure there
+  warns; the private entry is the source of truth).
+* reads list ONLY the files the chosen snapshot names — stale data files
+  from overwritten versions stay on disk for older snapshots until
+  :func:`vacuum` removes the dirs no kept snapshot references and
+  truncates the log before the oldest kept snapshot.
 
 Scale shape: data writes are ordinary distributed ``df.write.parquet``;
 the log entry is one small driver-side JSON (same asymmetry as
@@ -40,7 +48,7 @@ import os
 import re
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -79,6 +87,65 @@ class Commit:
 
 def _log_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, _LOG_DIR, f"{version:08d}.json")
+
+
+def _now_ms(timestamp_ms: int | None) -> int:
+    return int(time.time() * 1000) if timestamp_ms is None else timestamp_ms
+
+
+def _replace_atomic(path: str, text: str) -> None:
+    """Write a sidecar as a whole: tmp file + ``os.replace``, so a crash
+    mid-write leaves the previous content, never a torn file."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+def _publish_exclusive(path: str, text: str) -> None:
+    """Create ``path`` holding ``text``, atomically AND exclusively: the
+    text goes to a temp file in the same dir, which is then hard-linked to
+    ``path``. The link raises ``FileExistsError`` if the name is taken
+    (O_EXCL semantics: one writer per version), and ``path`` never exists
+    half-written — a crash leaves only the temp file, which no log reader
+    lists."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    try:
+        with open(tmp, "x") as f:
+            f.write(text)
+        os.link(tmp, path)
+    finally:
+        try:
+            os.unlink(tmp)
+        except FileNotFoundError:
+            pass
+
+
+def _publish(table_dir: str, entry: Commit, **mirror_kw) -> Commit:
+    """Publish ``entry`` as the table's next log file, then mirror it into
+    ``_delta_log``. The mirror is best-effort: the private entry is the
+    source of truth, so a lost mirror race is ignored and any other mirror
+    failure (a crashed earlier mirror write, foreign junk) only warns —
+    it must not make a durable commit look failed. ``mirror_kw`` are the
+    :func:`deltalog.mirror_commit` file arguments (``new_entries``,
+    ``carried_entries``, ``schema_json``, ``cdc_entries``)."""
+    _publish_exclusive(_log_path(table_dir, entry.version),
+                       json.dumps(asdict(entry)))
+    from . import deltalog
+
+    try:
+        deltalog.mirror_commit(
+            table_dir, entry.version, entry.mode,
+            timestamp_ms=entry.timestamp_ms,
+            data_change=entry.data_change, **mirror_kw)
+    except FileExistsError:
+        pass  # lost a mirror race; the winning writer recorded this version
+    except Exception as exc:  # pragma: no cover - corrupt/foreign mirror
+        import warnings
+
+        warnings.warn(f"delta-log mirror failed for v{entry.version}: {exc}")
+    return entry
 
 
 def read_log(table_dir: str) -> list[Commit]:
@@ -204,11 +271,21 @@ def snapshot_file_entries(
         raise FileNotFoundError(f"no versioned table at {table_dir!r}")
     if version is None:
         version = commits[-1].version
-    chain = [c for c in commits if c.version <= version]
+    return _replay(commits, version, lambda c: [
+        e for d in c.dirs for e in _dir_file_entries(table_dir, d)])
+
+
+def _replay(commits: list[Commit], version: int, expand) -> list[dict]:
+    """Log replay up to ``version``: the manifest entries of the latest
+    overwrite plus every later append. A file-level commit contributes its
+    own manifest; ``expand(commit)`` gives the entries of a dir-granular
+    one (each caller picks how: dirs as path-only entries, or footer
+    reads of the files inside them)."""
     entries: list[dict] = []
-    for c in chain:
-        batch = (list(c.files) if c.files is not None
-                 else [e for d in c.dirs for e in _dir_file_entries(table_dir, d)])
+    for c in commits:
+        if c.version > version:
+            continue
+        batch = list(c.files) if c.files is not None else expand(c)
         if c.mode == "overwrite":
             entries = batch
         else:
@@ -288,31 +365,6 @@ def write_table(
     files = None
     if carry_files is not None:
         files = tuple(list(carry_files) + new_entries)
-    entry = Commit(
-        version=version,
-        timestamp_ms=int(time.time() * 1000) if timestamp_ms is None else timestamp_ms,
-        mode=mode,
-        dirs=(rel,),
-        files=files,
-        stream_batch_id=stream_batch_id,
-        stream_app_id=stream_app_id,
-        cdc=cdc_rel,
-        data_change=data_change,
-    )
-    # O_EXCL: exactly one writer can create this version file.
-    with open(_log_path(table_dir, version), "x") as f:
-        json.dump({"version": entry.version, "timestamp_ms": entry.timestamp_ms,
-                   "mode": entry.mode, "dirs": list(entry.dirs),
-                   "files": list(entry.files) if entry.files is not None else None,
-                   "stream_batch_id": entry.stream_batch_id,
-                   "stream_app_id": entry.stream_app_id,
-                   "cdc": entry.cdc,
-                   "data_change": entry.data_change},
-                  f)
-    # Mirror into the Delta-protocol-shaped public log (interop surface;
-    # best-effort — the private commit above is the source of truth).
-    from . import deltalog
-
     cdc_entries = None
     if cdc_rel is not None:
         cdc_abs = os.path.join(table_dir, cdc_rel)
@@ -320,26 +372,24 @@ def write_table(
             {"path": os.path.join(cdc_rel, f),
              "size": os.path.getsize(os.path.join(cdc_abs, f))}
             for f in sorted(os.listdir(cdc_abs)) if f.endswith(".parquet")]
-    try:
-        deltalog.mirror_commit(
-            table_dir, version, mode,
-            new_entries=new_entries,
-            carried_entries=list(carry_files or []),
-            schema_json=df.schema.json(),
-            timestamp_ms=entry.timestamp_ms,
-            cdc_entries=cdc_entries,
+    return _publish(
+        table_dir,
+        Commit(
+            version=version,
+            timestamp_ms=_now_ms(timestamp_ms),
+            mode=mode,
+            dirs=(rel,),
+            files=files,
+            stream_batch_id=stream_batch_id,
+            stream_app_id=stream_app_id,
+            cdc=cdc_rel,
             data_change=data_change,
-        )
-    except FileExistsError:
-        pass  # lost a mirror race; the winning writer recorded this version
-    except Exception as exc:  # pragma: no cover - corrupt/foreign mirror
-        # the PRIVATE commit above already succeeded and is the source of
-        # truth; a broken _delta_log (crashed earlier mirror write,
-        # foreign junk) must not make a durable commit look failed
-        import warnings
-
-        warnings.warn(f"delta-log mirror failed for v{version}: {exc}")
-    return entry
+        ),
+        new_entries=new_entries,
+        carried_entries=list(carry_files or []),
+        schema_json=df.schema.json(),
+        cdc_entries=cdc_entries,
+    )
 
 
 _SCHEMA_PATCH_FILE = "_schema_patch.json"
@@ -366,12 +416,8 @@ def append_schema_patch(table_dir: str, patch: dict) -> None:
     patch["as_of_version"] = commits[-1].version if commits else 0
     patches = read_schema_patches(table_dir)
     patches.append(patch)
-    path = os.path.join(table_dir, _LOG_DIR, _SCHEMA_PATCH_FILE)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(patches, f)
-    os.replace(tmp, path)
+    _replace_atomic(os.path.join(table_dir, _LOG_DIR, _SCHEMA_PATCH_FILE),
+                    json.dumps(patches))
 
 
 def clear_schema_patches(table_dir: str) -> None:
@@ -379,10 +425,7 @@ def clear_schema_patches(table_dir: str) -> None:
     stale patches must not apply to the replacement's columns)."""
     path = os.path.join(table_dir, _LOG_DIR, _SCHEMA_PATCH_FILE)
     if os.path.exists(path):
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump([], f)
-        os.replace(tmp, path)
+        _replace_atomic(path, "[]")
 
 
 def apply_schema_patches(df: DataFrame, table_dir: str,
@@ -437,12 +480,8 @@ def read_constraints(table_dir: str) -> list[dict]:
 
 
 def write_constraints(table_dir: str, cons: list[dict]) -> None:
-    path = os.path.join(table_dir, _LOG_DIR, _CONSTRAINTS_FILE)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(cons, f)
-    os.replace(tmp, path)
+    _replace_atomic(os.path.join(table_dir, _LOG_DIR, _CONSTRAINTS_FILE),
+                    json.dumps(cons))
 
 
 _STATS_FILE = "_stats.json"
@@ -462,12 +501,8 @@ def read_stats(table_dir: str) -> dict | None:
 
 
 def write_stats(table_dir: str, stats: dict) -> None:
-    path = os.path.join(table_dir, _LOG_DIR, _STATS_FILE)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp, path)
+    _replace_atomic(os.path.join(table_dir, _LOG_DIR, _STATS_FILE),
+                    json.dumps(stats))
 
 
 _WATERMARKS_FILE = "_stream_watermarks.json"
@@ -486,14 +521,11 @@ def _merge_stream_watermarks(table_dir: str, marks: dict[str, int]) -> None:
         pass
     for k, v in marks.items():
         existing[k] = max(existing.get(k, -1), v)
-    # tmp + os.replace (same pattern as write_constraints): a crash
-    # mid-write must not corrupt the sidecar — _sidecar_watermark would
-    # read -1 and a post-vacuum checkpoint-recovery replay would
-    # double-append, the exact failure this sidecar exists to prevent
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(existing, f)
-    os.replace(tmp, path)
+    # atomic replace: a crash mid-write must not corrupt the sidecar —
+    # _sidecar_watermark would read -1 and a post-vacuum checkpoint-
+    # recovery replay would double-append, the exact failure this sidecar
+    # exists to prevent
+    _replace_atomic(path, json.dumps(existing))
 
 
 def _sidecar_watermark(table_dir: str, app_id: str | None) -> int:
@@ -541,35 +573,12 @@ def restore(
             f"RESTORE: version {to_version} not in log "
             f"(have {[c.version for c in commits]})")
     entries = snapshot_file_entries(table_dir, to_version)
-    version = commits[-1].version + 1
-    entry = Commit(
-        version=version,
-        timestamp_ms=int(time.time() * 1000) if timestamp_ms is None else timestamp_ms,
-        mode="overwrite",
-        dirs=(),
-        files=tuple(entries),
-    )
-    with open(_log_path(table_dir, version), "x") as f:
-        json.dump({"version": entry.version, "timestamp_ms": entry.timestamp_ms,
-                   "mode": entry.mode, "dirs": [],
-                   "files": list(entry.files)}, f)
-    from . import deltalog
-
-    try:
-        deltalog.mirror_commit(
-            table_dir, version, "overwrite",
-            new_entries=[],
-            carried_entries=entries,
-            schema_json=schema_json,
-            timestamp_ms=entry.timestamp_ms,
-        )
-    except FileExistsError:
-        pass
-    except Exception as exc:  # pragma: no cover - corrupt/foreign mirror
-        import warnings
-
-        warnings.warn(f"delta-log mirror failed for v{version}: {exc}")
-    return entry
+    return _publish(
+        table_dir,
+        Commit(version=commits[-1].version + 1,
+               timestamp_ms=_now_ms(timestamp_ms), mode="overwrite",
+               dirs=(), files=tuple(entries)),
+        new_entries=[], carried_entries=entries, schema_json=schema_json)
 
 
 def clone(
@@ -665,40 +674,16 @@ def clone(
             e["path"] = os.path.abspath(p)
             entries.append(e)
     os.makedirs(os.path.join(dst_dir, _LOG_DIR), exist_ok=True)
-    entry = Commit(
-        version=1,
-        timestamp_ms=(int(time.time() * 1000)
-                      if timestamp_ms is None else timestamp_ms),
-        mode="overwrite",
-        dirs=(),
-        files=tuple(entries),
-    )
-    with open(_log_path(dst_dir, 1), "x") as f:
-        json.dump({"version": 1, "timestamp_ms": entry.timestamp_ms,
-                   "mode": "overwrite", "dirs": [],
-                   "files": list(entry.files)}, f)
+    entry = _publish(
+        dst_dir,
+        Commit(version=1, timestamp_ms=_now_ms(timestamp_ms),
+               mode="overwrite", dirs=(), files=tuple(entries)),
+        new_entries=[], carried_entries=entries, schema_json=schema_json)
     if patches:
-        path = os.path.join(dst_dir, _LOG_DIR, _SCHEMA_PATCH_FILE)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(patches, f)
-        os.replace(tmp, path)
+        _replace_atomic(os.path.join(dst_dir, _LOG_DIR, _SCHEMA_PATCH_FILE),
+                        json.dumps(patches))
     if cons:
         write_constraints(dst_dir, cons)
-    from . import deltalog
-
-    try:
-        deltalog.mirror_commit(
-            dst_dir, 1, "overwrite",
-            new_entries=[],
-            carried_entries=entries,
-            schema_json=schema_json,
-            timestamp_ms=entry.timestamp_ms,
-        )
-    except Exception as exc:  # pragma: no cover - best-effort mirror
-        import warnings
-
-        warnings.warn(f"delta-log mirror failed for clone: {exc}")
     return entry
 
 
@@ -726,19 +711,12 @@ def resolve_snapshot(
         version = eligible[-1].version
     if version is None:
         version = commits[-1].version
-    chosen = [c for c in commits if c.version <= version]
-    if not chosen or chosen[-1].version != version:
-        known = [c.version for c in commits]
+    known = [c.version for c in commits]
+    if version not in known:
         raise LookupError(f"version {version} not in log (have {known})")
-    paths: list[str] = []
-    for c in chosen:
-        batch = ([e["path"] for e in c.files] if c.files is not None
-                 else list(c.dirs))
-        if c.mode == "overwrite":
-            paths = batch
-        else:
-            paths.extend(batch)
-    return version, [os.path.join(table_dir, p) for p in paths]
+    entries = _replay(commits, version,
+                      lambda c: [{"path": d} for d in c.dirs])
+    return version, [os.path.join(table_dir, e["path"]) for e in entries]
 
 
 def read_table(

@@ -67,10 +67,6 @@ def events_stream(
     return df
 
 
-def fixture_events_stream(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
-    return events_stream(spark, os.path.join(sf_dir, "events.parquet"), **kw)
-
-
 _FILE_DIRS: dict[str, str] = {}
 
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 
 from duckdb_read_spark import op_queries
+from duckdb_read_spark.catalog import register_tables
 from duckdb_read_spark.drivercanon import compare_frames, first_diff, frame_hash
 from duckdb_read_spark.queries import QUERIES
 
@@ -39,6 +40,9 @@ def test_declared_driver_hash(name, engine, duck):
     "name", sorted(n for n, s in op_queries.OP_QUERIES.items() if s.duckdb_sql)
 )
 def test_operator_driver_hash(name, spark, duck):
+    # some runners (q123, q137) read the fixture views by name; register
+    # them here so the test does not depend on an earlier test's setup
+    register_tables(spark, SF_DIR)
     spec = op_queries.OP_QUERIES[name]
     spark_pdf = spec.runner(spark, SF_DIR).toPandas()
     oracle_pdf = _oracle_pdf(duck, spec.duckdb_sql)
